@@ -5,15 +5,19 @@ in-process threaded HTTP server with scripted faults."""
 
 from __future__ import annotations
 
+from math import ceil
+
 import pytest
 from pyspark.sql import functions as F
 
+from tile_etl_spark.io import plan_bytes
 from tile_etl_spark.tiles.http_store import (
     HttpPutClient,
     LocalObjectStore,
     ObjectStoreError,
     objectstore_sink_http,
 )
+from tile_etl_spark.tiles.sink import put_stage, put_stage_width
 
 
 @pytest.fixture()
@@ -115,3 +119,41 @@ def test_sink_end_to_end_with_faults(spark, store):
         suffix = r["object_key"].split("/")[2]
         assert body == f"tile-{suffix}".encode()
         assert meta["content-type"] == "image/jpg"
+
+
+def test_put_stage_width_is_the_session_slots(spark, store):
+    """The PUT stage is as wide as the session's slots, not as its
+    input: a 32-partition input (the chaos test's shape) is coalesced.
+    A 1-partition input is returned untouched (a coalesce would hide
+    its SinglePartition from a downstream groupBy), and so is an input
+    whose estimate is unknown or implausible."""
+    slots = spark.sparkContext.defaultParallelism
+    wide = objectstore_sink_http(
+        _tiles_df(spark, 40).repartition(32), store.endpoint
+    )
+    assert wide.rdd.getNumPartitions() == slots
+    rows = wide.collect()
+    assert len(rows) == 40 and all(r["status"] == "ok" for r in rows)
+    assert all(n == 1 for n in store.stores.values())
+    narrow = _tiles_df(spark, 40).coalesce(1)
+    assert 0 < plan_bytes(narrow) < 1 << 20  # a known estimate
+    assert put_stage(narrow) is narrow
+
+    # An RDD-backed leaf has no statistics; dropping a column scales
+    # Long.MaxValue down to just under it, a "width" beyond a Java int.
+    keys = [(f"Lite/5/{i}/{i}", f"tile-{i}".encode(), i) for i in range(20)]
+    no_stats = spark.createDataFrame(
+        spark.sparkContext.parallelize(keys, 6),
+        "object_key STRING, content BINARY, extra INT",
+    )
+    out = objectstore_sink_http(no_stats, store.endpoint)
+    assert out.rdd.getNumPartitions() == 6
+    assert sorted(r["status"] for r in out.collect()) == ["ok"] * 20
+
+    mpb, marker = 128 * 1024 * 1024, (1 << 63) - 1
+    assert put_stage_width(0, slots, mpb, marker) is None  # unreadable
+    assert put_stage_width(marker, slots, mpb, marker) is None  # no stats
+    assert put_stage_width(marker - 1, slots, mpb, marker) is None
+    assert put_stage_width(10 << 20, slots, mpb, marker) == slots
+    tb = 10**12
+    assert put_stage_width(tb, slots, mpb, marker) == ceil(tb / mpb)

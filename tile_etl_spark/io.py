@@ -294,6 +294,19 @@ def source_bytes(sf_dir: str, name: str) -> int:
         return 1 << 62
 
 
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's ``sizeInBytes`` estimate of ``df``'s optimized plan —
+    free (no job). 0 when the estimate cannot be read. A plan without
+    statistics reports ``spark.sql.defaultSizeInBytes`` (Long.MaxValue)
+    or more."""
+    try:
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        return 0
+
+
 # Compressed-bytes gate under which a table-backed relation may carry a
 # forced BROADCAST hint (scaled_broadcast_hint) or be pinned in the
 # columnar cache (cached_dim_view). 32 MB compressed is comfortably

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tile_etl_spark.io import load, plan_memo
+from tile_etl_spark.io import load, plan_bytes, plan_memo
 from tile_etl_spark.registry import query
 from tile_etl_spark.session import ensure_session_determinism
 
@@ -282,16 +282,7 @@ def lsh_candidate_pairs(
     # candidate cache on every run, +40% on q_dedup_near).
     spark = sigs.sparkSession
     if two_pass is None:
-        try:
-            est = int(
-                sigs._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        except Exception:
-            est = 0
-        two_pass = est > _LSH_TWOPASS_BYTES
+        two_pass = plan_bytes(sigs) > _LSH_TWOPASS_BYTES
     v_sigs = f"__lsh_sigs_{sigs.semanticHash() & 0xFFFFFFFF:x}"
     sigs.createOrReplaceTempView(v_sigs)
     bucketed = f"""
@@ -382,16 +373,7 @@ def exact_jaccard(
     itself; a caller-supplied ``shingles`` frame is used as-is."""
     if shingles is None:
         if prune is None:
-            try:
-                est = int(
-                    docs._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            except Exception:
-                est = 0
-            prune = est > _JACCARD_PRUNE_BYTES
+            prune = plan_bytes(docs) > _JACCARD_PRUNE_BYTES
         if prune:
             cand = (
                 pairs.select(F.col("d1").alias("doc_id"))

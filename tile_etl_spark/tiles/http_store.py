@@ -28,10 +28,12 @@ driver, never serialized), connection reuse amortizes setup across a
 partition's objects, and retry state is per-object — the stage stays
 embarrassingly parallel, matching the reference's Semaphore(40)
 admission envelope via task-slot admission (SURVEY §2A A12).
+The stage's width comes from ``tiles.sink.put_stage``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import http.client
 import socket
 import threading
@@ -42,22 +44,22 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from tile_etl_spark.tiles.sink import put_stage
+
 # Status codes the client treats as retryable, mirroring the public
 # S3/GCS guidance: throttle + transient server errors.
 RETRYABLE = frozenset({429, 500, 502, 503, 504})
 
 
 class ObjectStoreError(Exception):
-    """PUT failure; ``attempts`` records how many requests were
-    actually made (1 for a non-retryable status, max_attempts when
-    retries are exhausted) so dead-letter accounting reconciles with
-    server-side request counts."""
+    """PUT permanently failed (non-retryable status or retries spent).
+    ``attempts`` records how many requests were actually made (1 for a
+    non-retryable status, max_attempts when retries are exhausted) so
+    dead-letter accounting reconciles with server-side request counts."""
 
     def __init__(self, msg: str, attempts: int = 0) -> None:
         super().__init__(msg)
         self.attempts = attempts
-
-    """PUT permanently failed (non-retryable status or retries spent)."""
 
 
 # --------------------------------------------------------------------------
@@ -161,8 +163,6 @@ class LocalObjectStore:
                     }
                     store.objects[key] = (body, meta)
                     store.stores[key] = store.stores.get(key, 0) + 1
-                import hashlib
-
                 etag = hashlib.md5(body).hexdigest()
                 try:
                     self.send_response(200)
@@ -379,7 +379,7 @@ def objectstore_sink_http(
         finally:
             client.close()
 
-    return df.select("object_key", "content").mapInPandas(
+    return put_stage(df.select("object_key", "content")).mapInPandas(
         put_batches,
         "object_key STRING, status STRING, error STRING, attempts INT",
     )

@@ -24,11 +24,13 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from math import ceil
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tile_etl_spark.io import plan_bytes
 from tile_etl_spark.registry import query
 from tile_etl_spark.tiles.grid import grid5_bounds_values_sql
 from tile_etl_spark.session import ensure_session_determinism
@@ -96,6 +98,63 @@ def cloud_connector_conf(
     raise ValueError(f"unknown object-store provider: {provider!r}")
 
 
+# ``coalesce`` takes a Java int; a wider "width" only comes from an
+# inflated estimate (see put_stage_width).
+_MAX_WIDTH = (1 << 31) - 1
+
+
+def put_stage_width(
+    est_bytes: int, slots: int, max_partition_bytes: int, no_stats_bytes: int
+) -> int | None:
+    """Task count of the PUT stage: the session's slots, or more when
+    the input's estimated bytes would exceed ``max_partition_bytes`` per
+    task. None when the estimate is unknown — 0 (unreadable) or
+    ``>= no_stats_bytes`` (Catalyst's "no statistics" marker) — or
+    gives more than ``_MAX_WIDTH`` tasks, as an inner join's product
+    of child sizes or a projected no-statistics leaf (just under the
+    marker) does: the input then keeps its own width."""
+    if 0 < est_bytes < no_stats_bytes:
+        width = max(slots, ceil(est_bytes / max_partition_bytes))
+        if width <= _MAX_WIDTH:
+            return width
+    return None
+
+
+def put_stage(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to ``put_stage_width`` partitions — the input of
+    every PUT stage (this module's and tiles/http_store.py's).
+
+    The width follows the session's slots, not the width the upstream
+    scan happened to have: a ``binaryFile`` scan charges every small
+    tile ``openCostInBytes`` (4 MB) and so packs only 32 tiles per
+    split, and every Python task costs a fixed share of worker CPU
+    (pyspark 4.1 calls ``importlib.invalidate_caches()`` per task, so
+    each zipimporter re-reads pyspark.zip's directory). The byte term
+    bounds each task at scale: a 100 TB cache still gets ≤128 MB tasks.
+    ``coalesce`` never shuffles and never adds partitions.
+
+    ``df`` is returned as is when its estimate is unknown (the width
+    is None) or its physical plan already has 1..width partitions: a
+    coalesce would turn e.g. a SinglePartition into an unknown
+    partitioning and add an exchange to a downstream groupBy. File
+    scans report 0 (unknown) partitions and are coalesced. Reading the
+    partitioning plans the input but runs no job."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    width = put_stage_width(
+        plan_bytes(df),
+        spark.sparkContext.defaultParallelism,
+        conf.filesMaxPartitionBytes(),
+        conf.defaultSizeInBytes(),
+    )
+    if width is None:
+        return df
+    parts = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if 0 < parts.numPartitions() <= width:
+        return df
+    return df.coalesce(width)
+
+
 def objectstore_sink(
     df: DataFrame,
     base_dir: str,
@@ -141,7 +200,7 @@ def objectstore_sink(
                 out, columns=["object_key", "status", "error"]
             )
 
-    return df.select("object_key", "content").mapInPandas(
+    return put_stage(df.select("object_key", "content")).mapInPandas(
         put_batches, "object_key STRING, status STRING, error STRING"
     )
 
